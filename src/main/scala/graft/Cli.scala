@@ -3,9 +3,14 @@ package graft
 import graft.config.{CountryRegistry, QueryConfig}
 import graft.`export`.{CacheKey, CountryCache, Exporter, ExportFormat, FeatureService, GeoJson, PublishMode, SectorService}
 import graft.operators.Normalize
+import graft.queries.Registry
 import graft.sources.{OvertureReader, ReadRequest}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.{Json, StageMetricsListener}
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions.col
+import scala.util.control.NonFatal
 
 /** Thin user-facing entry point — the engine-side analogue of the
   * reference's typer CLI (reference: src/o2agol/cli.py — `export`,
@@ -30,24 +35,29 @@ import org.apache.spark.sql.functions.col
   *   graft.Cli compact      <inDir> <outDir> [--target-mb=128]
   *   graft.Cli cleanup      <servicePath> <keep,names> [--dry-run]
   *   graft.Cli version
+  *   graft.Cli time         <registry,names> <sfDir> [--runs=3] [--stages=out.json]
+  *   graft.Cli explain      <registry,names> <sfDir> <outDir> [--suffix=_before]
+  *   graft.Cli verify       <registry,names> <sfDir> <outDir>
+  *   graft.Cli plan         <sfDir>
+  *   graft.Cli streamfloor  <sfDir> [--runs=3]
   * }}}
+  *
+  * The last five are diagnostics over registry rows: `time` prints
+  * per-run and min seconds of `count()` (`--stages` adds per-run job
+  * groups of stage metrics); `explain` writes each row's formatted
+  * plan to `<name><suffix>.txt`; `verify` writes each row's result
+  * plus their `oracle_sql.json` for `tools/check_oracle.py`; `plan`
+  * prints `name shuffle bcast pushed` for every batch row;
+  * `streamfloor` times the bare StreamingQuery lifecycle. A row that
+  * throws prints its trace and the others still run; the verb then
+  * fails naming every failed row, so scripts see a nonzero exit.
+  *
+  * `main` runs on [[GraftSession]] at `SPARK_GRAFT_MASTER` (default
+  * `local[n]`, n = [[GraftSession.cores]]).
   */
 object Cli {
 
   val Version = "0.2.0"
-
-  /** Build (or reuse) the session; factored out so tests drive the
-    * verbs against their own session.
-    */
-  private def session(): SparkSession =
-    SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
 
   private def flags(args: Seq[String]): (Seq[String], Map[String, String]) = {
     val (f, pos) = args.partition(_.startsWith("--"))
@@ -57,6 +67,75 @@ object Cli {
       else s.substring(2) -> "true"
     }.toMap
     (pos, kv)
+  }
+
+  /** A comma-separated positional list, blanks dropped. */
+  private def names(list: String): Seq[String] =
+    list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
+  private def publishMode(mode: String): PublishMode.Value = mode.toLowerCase match {
+    case "auto"      => PublishMode.Auto
+    case "initial"   => PublishMode.Initial
+    case "overwrite" => PublishMode.Overwrite
+    case "append"    => PublishMode.Append
+    case other       => throw new IllegalArgumentException(s"unknown mode: $other")
+  }
+
+  /** `--geom=xCol,yCol`: the point coordinate column names. */
+  private def geomCols(opt: Map[String, String]): Option[(String, String)] =
+    opt.get("geom").map { g =>
+      g.split(",", 2) match {
+        case Array(xc, yc) if yc.nonEmpty => (xc, yc)
+        case _ => throw new IllegalArgumentException(s"--geom expects xCol,yCol (got '$g')")
+      }
+    }
+
+  private def query(name: String): (SparkSession, String) => DataFrame =
+    SparkEntry.queries.getOrElse(name,
+      throw new IllegalArgumentException(s"no registered query '$name' (see list-registry)"))
+
+  /** Run `body` on each row; a row that throws prints its trace and the
+    * rest still run. Afterwards fail naming every failed row, so a
+    * script sees the failure in the exit status.
+    */
+  private def eachRow(verb: String, rows: Seq[String])(body: String => Unit): Unit = {
+    val failed = rows.filter { name =>
+      try { body(name); false }
+      catch {
+        case NonFatal(e) =>
+          println(s"[$verb] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
+          e.printStackTrace()
+          true
+      }
+    }
+    if (failed.nonEmpty) throw new IllegalStateException(
+      s"$verb: ${failed.size} of ${rows.size} rows failed: ${failed.mkString(", ")}")
+  }
+
+  /** Print the seconds of each of `runs` calls of `once` (given the run
+    * number, returning a row count) and their min.
+    */
+  private def timeRuns(label: String, runs: Int)(once: Int => Long): Unit = {
+    val times = (1 to runs).map { i =>
+      val t0 = System.nanoTime()
+      val n = once(i)
+      val t = (System.nanoTime() - t0) / 1e9
+      println(f"[time] $label run $i: $t%.3f s ($n rows)")
+      t
+    }
+    println(f"[time] $label min=${times.min}%.3f s")
+  }
+
+  /** The `plan` verb's rows: `name shuffle bcast pushed`, measured by
+    * the same functions as ExchangeBudgetSpec and PushdownGuardSpec.
+    */
+  private[graft] def plan(spark: SparkSession, sfDir: String, rows: Seq[String]): Unit = {
+    println("name shuffle bcast pushed")
+    eachRow("plan", rows) { name =>
+      val df = query(name)(spark, sfDir)
+      val (shuffle, bcast) = PlanCheck.exchangeCounts(df)
+      println(s"$name $shuffle $bcast ${PlanCheck.hasPushedFilters(df)}")
+    }
   }
 
   /** catalog entry → read → sanitize → enrich: the common front half
@@ -117,12 +196,8 @@ object Cli {
         val raw = opt.get("raw").exists(_.toBoolean)
         val df = runPipeline(spark, cfg, sfDir, opt.getOrElse("country", "AFG"), date, raw)
         val fmt = ExportFormat.fromPath(outPath)
-        val geomCols = opt.get("geom").map { g =>
-          g.split(",", 2) match {
-            case Array(xc, yc) if yc.nonEmpty => (col(xc).cast("double"), col(yc).cast("double"))
-            case _ => throw new IllegalArgumentException(
-              s"--geom expects xCol,yCol (got '$g')")
-          }
+        val geom = geomCols(opt).map { case (xc, yc) =>
+          (col(xc).cast("double"), col(yc).cast("double"))
         }
         // Multilayer dict routing for the formats the reference
         // writes as layered single files (export.py:337-344 GPKG,
@@ -132,7 +207,7 @@ object Cli {
         // convention).
         if (cfg.isMultilayer &&
             (fmt == ExportFormat.Gpkg || fmt == ExportFormat.GeoJson)) {
-          val (xc, yc) = geomCols.getOrElse(throw new IllegalArgumentException(
+          val (xc, yc) = geom.getOrElse(throw new IllegalArgumentException(
             s"multilayer $fmt export needs --geom=xCol,yCol"))
           val layers = Seq("places", "buildings").map { ln =>
             ln -> df.filter(col("source_type") === ln).drop("source_type")
@@ -152,9 +227,9 @@ object Cli {
           // raw single layer: the reference names it "features"
           // (export.py:346-348) and stamps data_type raw_overture
           Exporter.write(df, outPath, fmt,
-            geometryJson = geomCols.map { case (x, y) => GeoJson.pointGeometry(x, y) },
+            geometryJson = geom.map { case (x, y) => GeoJson.pointGeometry(x, y) },
             target = if (raw) "features" else name, generatedAt = date,
-            geometryWkb = geomCols.map { case (x, y) => graft.functions.Wkb.wkbFromXY(x, y) },
+            geometryWkb = geom.map { case (x, y) => graft.functions.Wkb.wkbFromXY(x, y) },
             raw = raw)
         }
         println(s"exported ${cfg.name} -> $outPath ($fmt)")
@@ -163,13 +238,7 @@ object Cli {
         val cfg = loadEntry(spark, catalogPath, name)
         val country = opt.getOrElse("country", "AFG")
         val df = runPipeline(spark, cfg, sfDir, country, date)
-        val mode = opt.getOrElse("mode", settings("publish.mode")).toLowerCase match {
-          case "auto"      => PublishMode.Auto
-          case "initial"   => PublishMode.Initial
-          case "overwrite" => PublishMode.Overwrite
-          case "append"    => PublishMode.Append
-          case other       => throw new IllegalArgumentException(s"unknown mode: $other")
-        }
+        val mode = publishMode(opt.getOrElse("mode", settings("publish.mode")))
         // Call-frame enrichment (errors.scala): the engine raised
         // with {service, layer, mode, stage}; only the CLI knows the
         // country and command.
@@ -210,24 +279,15 @@ object Cli {
       // half-width (the testdata carries no polygon geometry; the
       // shoelace centroid math still runs for real and must land
       // back on the center).
-      case Seq("publish-sectors", catalogPath, names, sfDir, servicePath) =>
+      case Seq("publish-sectors", catalogPath, sectors, sfDir, servicePath) =>
         val t = Tables(spark, sfDir)
-        val mode = opt.getOrElse("mode", "initial").toLowerCase match {
-          case "auto" => PublishMode.Auto
-          case "initial" => PublishMode.Initial
-          case "overwrite" => PublishMode.Overwrite
-          case "append" => PublishMode.Append
-          case other => throw new IllegalArgumentException(s"unknown mode: $other")
-        }
-        val geom = opt.get("geom").map(_.split(",", 2) match {
-          case Array(xc, yc) if yc.nonEmpty => (xc, yc)
-          case g => throw new IllegalArgumentException(s"--geom expects xCol,yCol (got '${g.mkString(",")}')")
-        })
+        val mode = publishMode(opt.getOrElse("mode", "initial"))
+        val geom = geomCols(opt)
         val square = opt.get("square").map(_.split(",", 3) match {
           case Array(xc, yc, h) => (xc, yc, h.toDouble)
           case g => throw new IllegalArgumentException(s"--square expects xCol,yCol,halfWidth (got '${g.mkString(",")}')")
         })
-        val bundles = names.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { n =>
+        val bundles = names(sectors).map { n =>
           val cfg = loadEntry(spark, catalogPath, n)
           val placesRaw = OvertureReader.read(t, ReadRequest(cfg.theme, filter = cfg.filter))
           val places = geom.fold(placesRaw) { case (xc, yc) =>
@@ -263,10 +323,7 @@ object Cli {
           case other => throw new IllegalArgumentException(
             s"run writes tabular results — use .parquet, .csv or .jsonl (got $other)")
         }
-        val fn = SparkEntry.queries.getOrElse(name,
-          throw new IllegalArgumentException(
-            s"no registered query '$name' (see list-registry)"))
-        Exporter.write(fn(spark, sfDir), outPath, fmt)
+        Exporter.write(query(name)(spark, sfDir), outPath, fmt)
         println(s"[cli] wrote $name -> $outPath")
 
       case Seq("list-registry") =>
@@ -346,13 +403,68 @@ object Cli {
 
       case Seq("cleanup", servicePath, keepList) =>
         val report = FeatureService.cleanup(spark, servicePath,
-          keep = keepList.split(",").map(_.trim).filter(_.nonEmpty).toSet,
+          keep = names(keepList).toSet,
           dryRun = opt.contains("dry-run"))
         println(s"recovered=${report.recovered.mkString(",")} " +
           s"removed=${report.orphansRemoved.mkString(",")} kept=${report.kept.mkString(",")}")
 
       case Seq("version") =>
         println(s"graft $Version (spark ${spark.version})")
+
+      case Seq("time", rows, sfDir) =>
+        val runs = opt.get("runs").fold(3)(_.toInt)
+        val stages = opt.get("stages").map { path =>
+          val l = new StageMetricsListener
+          spark.sparkContext.addSparkListener(l)
+          (path, l)
+        }
+        try eachRow("time", names(rows)) { name =>
+          val fn = query(name)
+          timeRuns(name, runs) { i =>
+            stages.foreach { case (_, l) =>
+              l.registerGroup(s"${name}_run$i")
+              spark.sparkContext.setJobGroup(s"${name}_run$i", name, interruptOnCancel = false)
+            }
+            fn(spark, sfDir).count()
+          }
+        } finally stages.foreach { case (path, l) =>
+          spark.sparkContext.clearJobGroup()
+          GraftBridge.drainListeners(spark)
+          spark.sparkContext.removeSparkListener(l)
+          Files.writeString(Paths.get(path), l.toJson)
+          println(s"[time] stages -> $path")
+        }
+
+      case Seq("explain", rows, sfDir, outDir) =>
+        val suffix = opt.getOrElse("suffix", "")
+        Files.createDirectories(Paths.get(outDir))
+        eachRow("explain", names(rows)) { name =>
+          val out = Paths.get(outDir, s"$name$suffix.txt")
+          Files.writeString(out,
+            query(name)(spark, sfDir).queryExecution.explainString(FormattedMode))
+          println(s"[explain] wrote $out")
+        }
+
+      // Same dump as graft.Verify, for the named rows only.
+      case Seq("verify", rows, sfDir, outDir) =>
+        val named = names(rows)
+        Files.createDirectories(Paths.get(outDir))
+        val oracle = SparkEntry.oracleSql
+        Files.writeString(Paths.get(outDir, "oracle_sql.json"), named
+          .flatMap(n => oracle.get(n).map(sql => s"${Json.quote(n)}: ${Json.quote(sql)}"))
+          .mkString("{", ",", "}"))
+        eachRow("verify", named) { name =>
+          query(name)(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          println(s"[verify] wrote $outDir/$name")
+        }
+
+      case Seq("plan", sfDir) =>
+        plan(spark, sfDir, Registry.all.map(_.name).filterNot(_.startsWith("st_")))
+
+      case Seq("streamfloor", sfDir) =>
+        timeRuns("stream_floor", opt.get("runs").fold(3)(_.toInt)) { _ =>
+          graft.queries.StreamQueries.stNoopFloor(spark, sfDir).count()
+        }
 
       case other =>
         throw new IllegalArgumentException(
@@ -361,7 +473,8 @@ object Cli {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = session()
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[${GraftSession.cores}]"))
     try run(spark, args.toIndexedSeq)
     finally spark.stop()
   }

@@ -11,9 +11,13 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Local core count: `SPARK_GRAFT_CPUS`, else the machine's cores. */
+  def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   def builder(
-      master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
-      shufflePartitions: Int = Runtime.getRuntime.availableProcessors(),
+      master: String = s"local[$cores]",
+      shufflePartitions: Int = cores,
       appName: String = "graft"
   ): SparkSession.Builder =
     SparkSession
@@ -30,8 +34,8 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
-  def local(): SparkSession = {
-    val s = builder().getOrCreate()
+  def local(master: String = s"local[$cores]"): SparkSession = {
+    val s = builder(master).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

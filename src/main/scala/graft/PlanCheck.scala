@@ -1,9 +1,8 @@
 package graft
 
-import graft.queries.Registry
-
-// Diagnostic main: prints condensed executed-plan facts per query
-// (broadcast usage, pushed filters, shuffle count).
+/** Executed-plan facts the plan-guard specs assert over the registry;
+  * `graft.Cli plan` prints them per row.
+  */
 object PlanCheck {
 
   /** Window nodes with an EMPTY partition spec in `df`'s optimized
@@ -68,47 +67,5 @@ object PlanCheck {
     val broadcast = live.count(_.contains("BroadcastExchange"))
     val shuffle = live.count(l => l.contains("Exchange") && !l.contains("BroadcastExchange"))
     (shuffle, broadcast)
-  }
-  /** `runMain graft.PlanCheck budget [dir]` prints the per-query
-    * exchange counts as `name shuffle bcast` rows measured in the
-    * TEST session shape (local[4]/4 shuffle partitions, same as
-    * SparkSpec) — the source of ExchangeBudgetSpec's budget table.
-    */
-  def budgetMain(dir: String): Unit = {
-    val spark = GraftSession.builder(master = "local[4]", shufflePartitions = 4).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Registry.all.filterNot(_.name.startsWith("st_")).foreach { q =>
-      try {
-        val (s, b) = exchangeCounts(q.fn(spark, dir))
-        println(s"BUDGET ${q.name} $s $b")
-      } catch { case e: Throwable => println(s"BUDGET ${q.name} FAILED ${e.getMessage.take(80)}") }
-    }
-    spark.stop()
-  }
-
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("budget")) {
-      budgetMain(if (args.length > 1) args(1) else "/root/testdata/sf0.001")
-      return
-    }
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = GraftSession.builder(master = "local[8]", shufflePartitions = 8).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    println(s"entry rows (sf0.001): ${SparkEntry.entry(spark).count()}")
-    Registry.all.foreach { q =>
-      try {
-        val plan = q.fn(spark, dir).queryExecution.executedPlan.toString
-        val shuffles = "Exchange".r.findAllIn(plan).length -
-          "ReusedExchange".r.findAllIn(plan).length -
-          "BroadcastExchange".r.findAllIn(plan).length
-        val bcasts = "BroadcastExchange|BroadcastQueryStage".r.findAllIn(plan).size
-        val pushed = plan.contains("PushedFilters: [") && !plan.contains("PushedFilters: []")
-        // Spark 4 executedPlan.toString marks codegen stages as
-        // "*(n) Operator"; count distinct stage ids.
-        val wsc = """\*\((\d+)\)""".r.findAllMatchIn(plan).map(_.group(1)).toSet.size
-        println(f"${q.name}%-22s shuffles=$shuffles%-3d bcast=$bcasts%-3d pushedFilters=$pushed%-5s codegenSpans=$wsc")
-      } catch { case e: Throwable => println(s"${q.name} EXPLAIN FAILED: ${e.getMessage.take(100)}") }
-    }
-    spark.stop()
   }
 }

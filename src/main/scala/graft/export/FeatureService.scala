@@ -3,6 +3,7 @@ package graft.`export`
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Json
 
 /** Publish modes (reference: src/o2agol/domain/enums.py:10-16). */
 object PublishMode extends Enumeration {
@@ -351,25 +352,14 @@ object FeatureService {
   def metadataPath(servicePath: String, layer: String): String =
     layerPath(servicePath, layer) + ".metadata.json"
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   private def metadataJson(m: ItemMetadata): String = {
     val fields = Seq(
-      m.title.map(v => s""""title":${jsonStr(v)}"""),
-      m.snippet.map(v => s""""snippet":${jsonStr(v)}"""),
-      m.description.map(v => s""""description":${jsonStr(v)}"""),
-      m.tags.map(t => s""""tags":[${t.map(jsonStr).mkString(",")}]"""),
-      Some(s""""visibility":${jsonStr(m.visibility)}"""),
-      Some(s""""groups":[${m.groups.map(jsonStr).mkString(",")}]""")
+      m.title.map(v => s""""title":${Json.quote(v)}"""),
+      m.snippet.map(v => s""""snippet":${Json.quote(v)}"""),
+      m.description.map(v => s""""description":${Json.quote(v)}"""),
+      m.tags.map(t => s""""tags":[${t.map(Json.quote).mkString(",")}]"""),
+      Some(s""""visibility":${Json.quote(m.visibility)}"""),
+      Some(s""""groups":[${m.groups.map(Json.quote).mkString(",")}]""")
     ).flatten
     fields.mkString("{", ",", "}")
   }

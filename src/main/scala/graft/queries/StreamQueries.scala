@@ -140,9 +140,8 @@ object StreamQueries {
     * AvailableNow, no-data batch off). What this measures is the
     * per-row IRREDUCIBLE floor the §8 streaming fixed-cost table
     * quotes: plan analysis + query start/stop + one source listing +
-    * one offset/commit WAL round-trip + sink drain. Run via
-    * `ScaleProbe query` is impossible (unregistered); use
-    * `ScaleProbe streamfloor <sfDir> [runs]`.
+    * one offset/commit WAL round-trip + sink drain. Unregistered,
+    * so `Cli time` cannot run it; use `Cli streamfloor <sfDir>`.
     */
   private[graft] def stNoopFloor(spark: SparkSession, dir: String): DataFrame = {
     val stage = plainStage(dir)

@@ -188,11 +188,7 @@ class CliSpec extends SparkSpec {
     assert(st.totalBytes > 0)
     assert(st.perRelease.map(r => (r._1, r._2)) == Seq(("2026-01", 2), ("2026-02", 1)))
     assert(st.perRelease.map(_._3).sum == st.totalBytes)
-    val out = new java.io.ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
-      Cli.run(spark, Seq("list-cache", s"$dir/cache"))
-    }
-    val text = out.toString("UTF-8")
+    val (_, text) = stdout(Cli.run(spark, Seq("list-cache", s"$dir/cache")))
     assert(text.contains("[cache-stats] release=2026-01 entries=2"))
     assert(text.contains("[cache-stats] release=2026-02 entries=1"))
     assert(text.contains(
@@ -215,6 +211,63 @@ class CliSpec extends SparkSpec {
     }
     assert(fmtErr.getMessage.contains("tabular"))
     Cli.run(spark, Seq("list-registry"))
+  }
+
+  /** `body`'s result and what it printed. */
+  private def stdout[T](body: => T): (T, String) = {
+    val out = new java.io.ByteArrayOutputStream()
+    val result = Console.withOut(new java.io.PrintStream(out, true, "UTF-8"))(body)
+    (result, out.toString("UTF-8"))
+  }
+
+  test("time verb prints per-run lines, writes one stage group per run, fails naming bad rows") {
+    val stages = s"${tmp()}/stages.json"
+    val (err, text) = stdout(intercept[IllegalStateException] {
+      Cli.run(spark, Seq("time", "q1_pricing,nope_row,src_select_alias", sfDir,
+        "--runs=2", s"--stages=$stages"))
+    })
+    for (name <- Seq("q1_pricing", "src_select_alias"); i <- 1 to 2)
+      assert(text.contains(s"[time] $name run $i: "), text)
+    assert(text.contains("[time] src_select_alias min="))
+    assert(text.contains("[time] nope_row FAILED"))
+    assert(err.getMessage.endsWith("1 of 3 rows failed: nope_row"), err.getMessage)
+    val groups = "\"([^\"]+)\":\\{\"jobs\":([0-9]+)".r
+      .findAllMatchIn(Files.readString(Paths.get(stages)))
+      .map(m => m.group(1) -> m.group(2).toInt).toMap - "_unattributed"
+    assert(groups.keySet == Set("q1_pricing_run1", "q1_pricing_run2",
+      "src_select_alias_run1", "src_select_alias_run2"), groups)
+    assert(groups.values.forall(_ >= 1))
+  }
+
+  test("explain verb writes <name><suffix>.txt") {
+    val dir = tmp()
+    Cli.run(spark, Seq("explain", "q1_pricing", sfDir, dir, "--suffix=_x"))
+    assert(Files.readString(Paths.get(dir, "q1_pricing_x.txt")).contains("== Physical Plan =="))
+  }
+
+  test("verify verb writes the run verb's rows plus oracle SQL for exactly the named rows") {
+    val dir = tmp()
+    val rows = Seq("q1_pricing", "src_select_alias")
+    Cli.run(spark, Seq("verify", rows.mkString(","), sfDir, s"$dir/v"))
+    val oracle = spark.read.option("multiLine", "true").json(s"$dir/v/oracle_sql.json")
+    assert(oracle.columns.toSet == rows.toSet)
+    assert(oracle.head().getAs[String]("q1_pricing") == SparkEntry.oracleSql("q1_pricing"))
+    for (name <- rows) {
+      Cli.run(spark, Seq("run", name, sfDir, s"$dir/$name.parquet"))
+      def sorted(path: String) = spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
+      assert(sorted(s"$dir/v/$name") == sorted(s"$dir/$name.parquet"), name)
+    }
+  }
+
+  test("plan verb prints the exchange counts ExchangeBudgetSpec computes") {
+    val rows = Seq("q1_pricing", "q3_priority")
+    val lines = stdout(Cli.plan(spark, sfDir, rows))._2.linesIterator.toSeq
+    assert(lines.head == "name shuffle bcast pushed")
+    for (name <- rows) {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val (s, b) = PlanCheck.exchangeCounts(df)
+      assert(lines.contains(s"$name $s $b ${PlanCheck.hasPushedFilters(df)}"), lines)
+    }
   }
 
   test("compact verb rewrites a parquet dir at the byte-planned file count") {

@@ -11,8 +11,8 @@ import graft.queries.Registry
   * silently, the same way the global-window and cartesian guards
   * closed their classes.
   *
-  * Budgets were measured with `runMain graft.PlanCheck budget` in
-  * this suite's exact session shape (local[4], 4 shuffle
+  * Budgets were measured with `graft.Cli plan` in this suite's
+  * exact session shape (SPARK_GRAFT_CPUS=4: local[4], 4 shuffle
   * partitions, sf0.001) — regenerate the table the same way after
   * an INTENTIONAL plan change, and justify any increase in the
   * commit that carries it.
@@ -708,7 +708,7 @@ class ExchangeBudgetSpec extends SparkSpec {
     val batch = Registry.all.filterNot(_.name.startsWith("st_")).map(_.name)
     val missing = batch.filterNot(budget.contains)
     assert(missing.isEmpty,
-      s"queries without an exchange budget (run PlanCheck budget and add them): $missing")
+      s"""queries without an exchange budget (run SPARK_GRAFT_CPUS=4 sbt "runMain graft.Cli plan $sfDir" and add them): $missing""")
   }
 
   test("no batch registry query exceeds its exchange budget") {

@@ -10,7 +10,7 @@ import graft.queries.Registry
   * a non-pushable expression in the predicate, a restructure above
   * the read — silently turns a pruned scan into a full scan at
   * 100 TB; this spec makes it a test failure instead. Measured with
-  * `runMain graft.PlanCheck` in the suite session shape; extend the
+  * `graft.Cli plan` in the suite session shape; extend the
   * list when a new filtered query lands.
   */
 class PushdownGuardSpec extends SparkSpec {

@@ -71,9 +71,11 @@ class RunLogSpec extends AnyFunSuite {
 
   test("strings escape; numeric values stay bare JSON numbers") {
     val (log, lines) = capture()
-    log.info("odd", "msg" -> "line\nbreak \"quoted\"", "n" -> -3.5, "v" -> "1.2.3")
+    log.info("odd", "msg" -> "line\nbreak \"quoted\"", "n" -> -3.5, "v" -> "1.2.3",
+      "ctl" -> "a\u0001b")
     val l = lines().head
     assert(l.contains("\"msg\":\"line\\nbreak \\\"quoted\\\"\""))
+    assert(l.contains("\"ctl\":\"a" + '\\' + "u0001b\""))
     assert(l.contains("\"n\":-3.5"))
     // version-ish strings must NOT be emitted as malformed numbers
     assert(l.contains("\"v\":\"1.2.3\""))
